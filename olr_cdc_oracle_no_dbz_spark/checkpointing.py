@@ -1,9 +1,12 @@
 """Lineage truncation policy (VERDICT r3 item 5).
 
-Iterative plans (the connected-components fixpoint) and read-then-
-overwrite merges (ParquetStateTable) must cut lineage each round —
-otherwise the plan tree grows per iteration and the overwrite would
-lazily scan files it is replacing. Two ways to cut it:
+Iterative plans (the connected-components fixpoint) must cut lineage
+each round, or the plan tree grows per iteration. The CDC pipeline cuts
+each micro-batch once at its boundary, so every reader of the batch
+shares one scan of its files. The state merge needs no cut although it
+overwrites buckets it reads: dynamic partition overwrite replaces the
+bucket directories only at job commit, after every read of the old
+files, and an aborted job leaves them untouched. Two ways to cut:
 
 - ``localCheckpoint`` (default): executor-local block storage. Fast
   (no distributed filesystem round-trip) and correct on this

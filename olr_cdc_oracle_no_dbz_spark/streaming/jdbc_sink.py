@@ -15,7 +15,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def _placeholder(paramstyle: str) -> str:
@@ -289,14 +288,10 @@ def write_batch(
             batch_size, paramstyle, parallelism,
         )
     data_cols = [c for c in batch_df.columns if c != "__deleted"]
-    live = [
-        tuple(r[c] for c in data_cols)
-        for r in batch_df.filter(~F.col("__deleted")).collect()
-    ]
-    dead = [
-        tuple(r[c] for c in key_cols)
-        for r in batch_df.filter(F.col("__deleted")).collect()
-    ]
+    # one collect, split on the driver; a NULL flag row is neither
+    rows = batch_df.collect()
+    live = [tuple(r[c] for c in data_cols) for r in rows if r["__deleted"] is False]
+    dead = [tuple(r[c] for c in key_cols) for r in rows if r["__deleted"] is True]
     conn = connection_factory()
     try:
         cur = conn.cursor()

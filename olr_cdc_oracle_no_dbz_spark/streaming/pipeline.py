@@ -10,11 +10,12 @@ backpressure).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from olr_cdc_oracle_no_dbz_spark.checkpointing import truncate_lineage
 from olr_cdc_oracle_no_dbz_spark.cdc.decode import (
     decode_events,
     filter_source,
@@ -24,6 +25,14 @@ from olr_cdc_oracle_no_dbz_spark.cdc.transactions import committed_only
 from olr_cdc_oracle_no_dbz_spark.schemas import CHANGE_EVENT_SCHEMA
 from olr_cdc_oracle_no_dbz_spark.streaming.source import read_change_stream
 from olr_cdc_oracle_no_dbz_spark.streaming.state import ParquetStateTable
+
+
+def _row_image(delta: DataFrame, state: ParquetStateTable) -> list[str]:
+    """The sink table's row image: key and data columns, without the
+    bookkeeping (``op``, ``__deleted``, order columns) that the
+    reference's ExtractNewRecordState never emits."""
+    internal = {"op", "__deleted", *state.order_cols}
+    return [c for c in delta.columns if c not in internal]
 
 
 def materialize_stream(
@@ -88,16 +97,16 @@ def materialize_stream(
                 batch_df.filter(F.col("_corrupt").isNull())
             ).drop("commit_scn")
             ev = filter_source(committed, owner, table)
-        delta = unwrap(ev, mode="rewrite")
+        # the trigger's only scan of its files: the emptiness check, the
+        # schema gate, the merge and the JDBC mirror all read this cut
+        delta = truncate_lineage(unwrap(ev, mode="rewrite"))
         if delta.isEmpty():
             return
+        image = _row_image(delta, state)
         if schema_catalog is not None:
-            # the subject is the sink table's ROW IMAGE (key + data
-            # columns) — bookkeeping columns are engine-internal, not
-            # part of the registered contract. check_and_register
-            # raises before any state mutation on incompatibility.
-            image = delta.drop("__deleted", *state.order_cols).schema
-            schema_catalog.check_and_register(subject, image)
+            # check_and_register raises before any state mutation on
+            # incompatibility
+            schema_catalog.check_and_register(subject, delta.select(*image).schema)
         state.merge_batch(delta)
         if jdbc_sink is not None:
             from olr_cdc_oracle_no_dbz_spark.cdc.materialize import (
@@ -108,7 +117,9 @@ def materialize_stream(
                 write_batch,
             )
 
-            compacted = latest_state(delta, state.key_cols, state.order_cols)
+            compacted = latest_state(
+                delta, state.key_cols, state.order_cols
+            ).select(*image, "__deleted")
             factory = jdbc_sink["connection_factory"]
             sink_table = jdbc_sink["table"]
             if jdbc_sink.get("auto_evolve", True):
@@ -120,7 +131,7 @@ def materialize_stream(
                     for stmt in evolve_statements(
                         sink_table,
                         current,
-                        compacted.drop(*state.order_cols).schema,
+                        compacted.schema,
                         jdbc_sink.get("dialect", "postgresql"),
                     ):
                         cur.execute(stmt)
@@ -128,7 +139,7 @@ def materialize_stream(
                 finally:
                     conn.close()
             write_batch(
-                compacted.drop(*state.order_cols),
+                compacted,
                 factory,
                 sink_table,
                 list(state.key_cols),
@@ -211,9 +222,9 @@ def materialize_stream_tables(
                 if delta.isEmpty():
                     continue
                 if schema_catalog is not None:
-                    image = delta.drop("__deleted", *state.order_cols).schema
                     schema_catalog.check_and_register(
-                        subjects[(owner, table)], image
+                        subjects[(owner, table)],
+                        delta.select(*_row_image(delta, state)).schema,
                     )
                 state.merge_batch(delta)
         finally:

@@ -11,7 +11,8 @@ the world per batch. This store fixes that:
 - A merge reads ONLY the buckets the delta touches (partition pruning on
   the directory layout) and dynamically overwrites only those buckets.
 - Per-batch cost is O(|delta| + touched_buckets * bucket_size), not
-  O(|state|). With n_buckets sized so a bucket fits an executor
+  O(|state|), in ONE exchange (on ``bucket_id``) that writes one file
+  per touched bucket. With n_buckets sized so a bucket fits an executor
   (e.g. 100 TB / 65536 buckets ≈ 1.6 GB), a small delta touches a small
   fraction of state.
 
@@ -28,10 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olr_cdc_oracle_no_dbz_spark.checkpointing import truncate_lineage
-from olr_cdc_oracle_no_dbz_spark.cdc.materialize import (
+from olr_cdc_oracle_no_dbz_spark.cdc.materialize import (  # noqa: F401
     DEFAULT_ORDER,
+    _align_schemas,
     latest_state,
-    merge_into_state,
+    merge_into_state,  # unused here; perfbench/trace.py wraps it by this name
     publish,
 )
 
@@ -93,39 +95,25 @@ class ParquetStateTable:
     # -- merge ------------------------------------------------------------
 
     def merge_batch(self, delta: DataFrame) -> None:
-        """Apply one changelog batch: LWW-compact the delta, merge into
-        the touched buckets only, dynamically overwrite those buckets.
+        """Apply one changelog batch: one LWW over the touched buckets'
+        state and the delta, grouped within a repartition by bucket,
+        dynamically overwriting those buckets. No lineage cut: dynamic
+        overwrite stages the output and swaps bucket directories only
+        at job commit, after every read of the old files.
 
-        Safe under redelivery: ``merge_into_state``'s (scn, seq) guard
-        makes re-applying a batch a no-op, so ``foreachBatch`` retries
-        after a crash are idempotent (ST3; reference relies on upsert
-        idempotence the same way, README.md:788-790).
+        Safe under redelivery: the (scn, seq) order makes re-applying a
+        batch a no-op, so ``foreachBatch`` retries after a crash are
+        idempotent (ST3; reference relies on upsert idempotence the
+        same way, README.md:788-790).
         """
-        compacted = latest_state(delta, self.key_cols, self.order_cols).withColumn(
-            _BUCKET, self._bucket_col()
+        rows = delta.withColumn(_BUCKET, self._bucket_col())
+        if self.exists():
+            touched = [r[0] for r in rows.select(_BUCKET).distinct().collect()]
+            state, rows = _align_schemas(self.read_internal(buckets=touched), rows)
+            rows = state.unionByName(rows)
+        merged = latest_state(
+            rows.repartition(_BUCKET), (_BUCKET, *self.key_cols), self.order_cols
         )
-        if not self.exists():
-            merged = compacted
-        else:
-            # touched buckets come from the RAW delta keys (cheap partial-
-            # agg distinct), not from `compacted` — evaluating compacted
-            # here would run the LWW compaction twice per batch (once for
-            # this collect, again inside the merge plan)
-            touched = [
-                r[0]
-                for r in delta.select(self._bucket_col().alias(_BUCKET))
-                .distinct()
-                .collect()
-            ]
-            state = self.read_internal(buckets=touched)
-            merged = merge_into_state(
-                state, compacted, self.key_cols, self.order_cols
-            ).withColumn(_BUCKET, self._bucket_col())
-        # Materialize before overwriting the partitions we just read
-        # (lazy plans must not scan files the write is replacing).
-        # truncate_lineage: localCheckpoint by default, durable
-        # checkpoint() under spark.graft.checkpoint.durable=true.
-        merged = truncate_lineage(merged)
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -152,4 +152,8 @@ def test_materialize_stream_with_jdbc_mirror(spark, tmp_path):
     assert {r["id"] for r in state.current().collect()} == {2}
     with sqlite3.connect(db_path) as db:
         got = db.execute("SELECT id, stock FROM products").fetchall()
+        cols = {r[1] for r in db.execute("PRAGMA table_info(products)")}
     assert got == [(2, 3)]
+    # the mirror carries the row image only: auto-evolve added none of
+    # the engine's bookkeeping columns (op, __deleted, scn, seq)
+    assert not cols & {"op", "__deleted", "scn", "seq"}, cols

@@ -626,6 +626,21 @@ def _smj_vs_cut_sites(plan: str) -> int:
     return hits
 
 
+def test_smj_vs_cut_sites_counts_a_known_flip(spark):
+    """Self-test of the parser the registry sweep relies on, on plans
+    Spark itself renders: a SortMergeJoin straight against a lazy cut
+    counts 1, one whose cut sits below an aggregate counts 0. Plan
+    format drift then fails here instead of silently undercounting."""
+    cut = spark.range(100).selectExpr("id AS k", "id % 7 AS v")
+    cut = cut.localCheckpoint(eager=False)
+    other = spark.range(1000).selectExpr("id AS k").hint("merge")
+    flip = _plan(cut.join(other, "k"))
+    deep = _plan(cut.groupBy("k").count().join(other, "k"))
+    assert "SortMergeJoin" in flip and "Scan ExistingRDD" in flip
+    assert _smj_vs_cut_sites(flip) == 1
+    assert _smj_vs_cut_sites(deep) == 0
+
+
 def test_registry_no_smj_against_cut_relation(spark, q):
     """VERDICT r14 item 4: the fuzzy-family regression generalizes —
     EVERY join against a lineage-cut relation loses its static size

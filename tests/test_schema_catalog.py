@@ -148,6 +148,7 @@ def test_materialize_stream_registers_and_refuses(spark, tmp_path):
     assert cat.versions("products") == [1]
     v1 = cat.get("products", 1)
     assert "id" in v1.fieldNames() and "__deleted" not in v1.fieldNames()
+    assert "op" not in v1.fieldNames()
 
     # evolved feed: new column -> version 2 registered, state merged
     from olr_cdc_oracle_no_dbz_spark.streaming.source import (
